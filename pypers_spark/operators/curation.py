@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from pypers_spark.stage import Stage
 
+# RepetitionFilter's per-doc token count, handed to TokenStats on `gated`.
+REP_N_TOKENS = "_rep_n_tokens"
+
 
 class IngestDocuments(Stage):
     """Open the documents table as a lazy scan, spread for compute."""
@@ -282,7 +285,9 @@ class RepetitionFilter(Stage):
             # surviving text (r12, guide §2.1): n_tokens is the count of
             # this doc's token rows = size(tokenize_ws(text)) exactly,
             # and every gated row has a metrics row by construction.
-            F.col("n_tokens").cast("int").alias("n_tokens"),
+            # Private name: a documents table with its own n_tokens
+            # column would otherwise make the join ambiguous.
+            F.col("n_tokens").cast("int").alias(REP_N_TOKENS),
         )
         gated = filtered.join(metrics, "doc_id").filter(
             (F.col("dup_2gram_frac") <= max_dup2) & (F.col("top_token_frac") <= max_top)
@@ -303,9 +308,9 @@ class TokenStats(Stage):
         # when RepetitionFilter ran (one fewer full tokenize pass over
         # the survivors — guide §2.1); fall back to tokenizing when the
         # pipeline is composed without it.
-        if "n_tokens" in gated.columns:
-            curated = gated.withColumn("n_tokens_ws", F.col("n_tokens")).drop(
-                "n_tokens"
+        if REP_N_TOKENS in gated.columns:
+            curated = gated.withColumn("n_tokens_ws", F.col(REP_N_TOKENS)).drop(
+                REP_N_TOKENS
             )
         else:
             curated = gated.withColumn(

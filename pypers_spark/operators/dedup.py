@@ -108,6 +108,13 @@ def _set_isize(a, b):
     array per evaluation. CaseWhen branches evaluate lazily, so equal
     pairs skip the intersect entirely and unequal pairs pay one extra
     O(first-mismatch) compare. |A ∩ A| = |A| — value-identical.
+
+    Precondition: ``a`` and ``b`` are duplicate-free. ``array_intersect``
+    returns distinct elements, so for an array with repeats the equal
+    fast path (``size(a)``) would count the repeats and the two branches
+    would disagree. Every caller passes a set built with
+    ``array_distinct`` (``_gram_table`` hashes distinct 4-gram strings to
+    int64 afterwards, so only a hash collision could repeat an element).
     """
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b

@@ -135,9 +135,10 @@ class Stage:
         """Run :meth:`process` if enabled; return the wall time (0 if skipped).
 
         Note the returned duration measures *plan construction* for lazy
-        DataFrame stages — actual execution happens at the task's
-        persistence boundary (see ``task.py``), which is the number that
-        matters at scale.
+        DataFrame stages. They execute in ``Task.store``, one write job
+        per stored field (an upstream field other stored fields are
+        built on is cached so it runs once); that write time is not
+        recorded per stage.
         """
         from pypers_spark import status as status_mod
 

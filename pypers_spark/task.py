@@ -15,6 +15,13 @@ instead of one gzipped pickle. Parquet is columnar + splittable, so a
 pushdown and column pruning apply to checkpointed fields exactly as to
 source tables, and a 100 TB field never transits the driver. Scalar
 (non-DataFrame) fields go to a JSON sidecar.
+
+``Task.store`` is where the lazy plans execute, one write job per
+field. When one stored field is built on another of the same input
+(``lang_stats = curated.groupBy("lang")...``), the upstream field is
+persisted for the duration of that input's writes, so the shared
+lineage runs once instead of once per field; fields that no other field
+reads are never cached.
 """
 
 from __future__ import annotations
@@ -104,6 +111,57 @@ def _is_dataframe(value: Any) -> bool:
     except ImportError:  # pragma: no cover - classic-only build
         ConnectDataFrame = ()
     return isinstance(value, (DataFrame, ConnectDataFrame))
+
+
+def _jseq(seq) -> Iterator[Any]:
+    """Iterate a JVM Scala ``Seq`` over py4j."""
+    return (seq.apply(i) for i in range(seq.size()))
+
+
+def _cache_shared_lineage(frames: List[Any]) -> List[Any]:
+    """Persist the frames that another of ``frames`` is built on.
+
+    Each frame is written by its own Spark job, so a frame derived from
+    another (``lang_stats = curated.groupBy(...)``) would re-run the
+    shared upstream chain once per frame. All candidates are persisted,
+    then the children of each frame's analyzed plan go through the
+    cache manager's substitution (the frame's own top node would match
+    its own cache). A frame whose ``InMemoryRelation`` turns up under
+    another frame stays persisted; the rest are released at once.
+    Frames their producer already cached are left alone, as are Spark
+    Connect frames (no JVM cache manager to ask). Returns the frames
+    left persisted; the caller unpersists them after its writes.
+    """
+    from pyspark.storagelevel import StorageLevel
+
+    frames = [
+        df for df in frames
+        if hasattr(df, "_jdf") and df.storageLevel == StorageLevel.NONE
+    ]
+    if len(frames) < 2:
+        return []
+    cache_manager = frames[0].sparkSession._jsparkSession.sharedState().cacheManager()
+    for df in frames:
+        df.persist()
+    keep = set()
+    try:
+        builders = [
+            cache_manager.lookupCachedData(df._jdf).get().cachedRepresentation().cacheBuilder()
+            for df in frames
+        ]
+        for reader, df in enumerate(frames):
+            for child in _jseq(df._jdf.queryExecution().analyzed().children()):
+                for leaf in _jseq(cache_manager.useCachedData(child).collectLeaves()):
+                    if leaf.nodeName() == "InMemoryRelation":
+                        keep.update(
+                            k for k, builder in enumerate(builders)
+                            if k != reader and builder.equals(leaf.cacheBuilder())
+                        )
+    finally:
+        for k, df in enumerate(frames):
+            if k not in keep:
+                df.unpersist()
+    return [frames[k] for k in sorted(keep)]
 
 
 class Task:
@@ -289,9 +347,12 @@ class Task:
     ) -> None:
         """Persist the task data object: parquet per DataFrame field.
 
-        DataFrame fields trigger their (single) execution here — this is
-        the pipeline's one materialization point. Scalar fields land in
-        a JSON sidecar.
+        DataFrame fields execute here — this is the pipeline's one
+        materialization point. Each field is one write job; a field
+        that another field of the same chunk is built on is cached for
+        the chunk's writes (see :func:`_cache_shared_lineage`), so each
+        stored lineage executes once. Scalar fields land in a JSON
+        sidecar.
         """
         assert self.runnable
         assert frozenset(data.keys()) == frozenset(self.input_ids)
@@ -300,6 +361,7 @@ class Task:
             input_dir = self._input_dir(input_id)
             input_dir.mkdir(parents=True, exist_ok=True)
             scalars = {}
+            frames = {}
             for field, value in chunk.items():
                 if _is_dataframe(value):
                     target = str(input_dir / f"{field}.parquet")
@@ -307,11 +369,17 @@ class Task:
                     # self, no diverging stage) must not be rewritten:
                     # overwriting a parquet path from a lazy scan of
                     # itself deletes the input mid-read.
-                    if getattr(value, "_pypers_loaded_from", None) == target:
-                        continue
-                    value.write.mode("overwrite").parquet(target)
+                    if getattr(value, "_pypers_loaded_from", None) != target:
+                        frames[target] = value
                 else:
                     scalars[field] = value
+            cached = _cache_shared_lineage(list(frames.values()))
+            try:
+                for target, value in frames.items():
+                    value.write.mode("overwrite").parquet(target)
+            finally:
+                for value in cached:
+                    value.unpersist()
             try:
                 scalars_json = json.dumps(scalars)
             except TypeError as exc:

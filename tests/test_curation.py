@@ -65,3 +65,47 @@ def test_curation_is_one_catalyst_plan(example_task, spark):
     assert read_schemas and all("n_chars" not in rs for rs in read_schemas)
     # no Python row UDFs anywhere in the composed pipeline
     assert "BatchEvalPython" not in explained
+
+CURATED_COLUMNS = [
+    "doc_id", "text", "lang", "source", "n_chars", "quality",
+    "dup_2gram_frac", "top_token_frac", "n_tokens_ws", "n_tokens_bpeish",
+]
+
+
+def test_docs_with_own_n_tokens_column(tmp_path, spark, sf_dir):
+    """A documents table that carries its own ``n_tokens`` column neither
+    collides with RepetitionFilter's token count nor stands in for it."""
+    from pyspark.sql import functions as F
+
+    from pypers_spark.config import Config
+    from pypers_spark.operators.curation import (
+        ExactDedup, IngestDocuments, QualityFilter, RepetitionFilter, TokenStats,
+    )
+    from pypers_spark.pipeline import create_pipeline
+
+    own_dir = tmp_path / "own"
+    spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
+        "n_tokens", F.lit(-1)
+    ).write.parquet(str(own_dir / "documents.parquet"))
+    pipeline = create_pipeline(
+        [IngestDocuments(), ExactDedup(), QualityFilter(), RepetitionFilter(), TokenStats()]
+    )
+
+    def run(src):
+        config = Config({"ingest-documents": {"sf_dir": str(src)}})
+        return pipeline.process(input_id=1, config=config)[0]
+
+    plain, own = run(sf_dir), run(own_dir)
+    assert plain["curated"].columns == CURATED_COLUMNS
+    assert own["curated"].columns == CURATED_COLUMNS[:5] + ["n_tokens"] + CURATED_COLUMNS[5:]
+    assert plain["lang_stats"].schema == own["lang_stats"].schema
+    assert sorted(plain["lang_stats"].collect()) == sorted(own["lang_stats"].collect())
+    assert own["curated"].filter("n_tokens != -1").count() == 0
+
+    # Without RepetitionFilter, TokenStats tokenizes instead of reading
+    # the table's own column.
+    gated = spark.read.parquet(str(own_dir / "documents.parquet")).withColumn(
+        "quality", F.lit(1.0)
+    )
+    curated = TokenStats().process(pipeline, Config(), gated=gated)["curated"]
+    assert curated.filter("n_tokens_ws <= 0").count() == 0

@@ -646,3 +646,91 @@ def test_batch_concurrent_ancestor_ordering_and_skip(tmp_path, sf_dir, spark):
         isinstance(e, dict) and e.get("info") == "enter" and "ok" in e["task"]
         for e in entries
     )
+
+
+# -- Task.store executes each stored lineage once -----------------------------
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _store_chunk(path, chunk):
+    """Store one hand-built chunk (input id 1) through ``Task.store``."""
+    from pypers_spark.pipeline import create_pipeline
+
+    task = Task(path, {"runnable": True, "input_ids": [1]})
+    task.store(create_pipeline([]), {1: chunk}, Config(), task.times)
+    return task
+
+
+@pytest.fixture
+def write_log(spark, monkeypatch):
+    """Record, per parquet write, whether any DataFrame was cached."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    spark.catalog.clearCache()
+    log = []
+    original = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        log.append(not _cache_manager(spark).isEmpty())
+        return original(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    yield log
+    spark.catalog.clearCache()
+
+
+def test_store_runs_shared_upstream_once(tmp_path, spark, write_log):
+    """A field built on another stored field reads the other's cache:
+    the upstream UDF runs once per row, not once per written field."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(v):
+        calls.add(1)
+        return v
+
+    a = spark.range(0, 20, numPartitions=2).withColumn("x", tick("id"))
+    b = a.groupBy((F.col("x") % 3).alias("k")).agg(F.sum("x").alias("s"))
+    task = _store_chunk(tmp_path, {"a": a, "b": b})
+    assert calls.value == 20
+    assert write_log == [True, True]
+    assert _cache_manager(spark).isEmpty()
+    stored = task.load()[1]
+    assert stored["a"].count() == 20
+    assert sorted(r["s"] for r in stored["b"].collect()) == [57, 63, 70]
+
+
+def test_store_releases_cache_when_a_write_fails(tmp_path, spark, write_log):
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def boom(v):
+        raise ValueError("field b fails mid-write")
+
+    a = spark.range(10).withColumn("x", F.col("id") * 2)
+    b = a.withColumn("y", boom("x"))
+    with pytest.raises(Exception, match="field b fails mid-write"):
+        _store_chunk(tmp_path, {"a": a, "b": b})
+    assert write_log == [True, True]
+    assert _cache_manager(spark).isEmpty()
+
+
+def test_store_caches_nothing_without_a_shared_lineage(tmp_path, spark, write_log):
+    """One field, two independent fields, or a derived field next to a
+    field loaded from its own target: no write runs with a cache."""
+    from pyspark.sql import functions as F
+
+    a = spark.range(10).withColumn("x", F.col("id") * 2)
+    _store_chunk(tmp_path / "one", {"a": a})
+    _store_chunk(tmp_path / "two", {"a": a, "c": spark.range(5)})
+    task = _store_chunk(tmp_path / "self", {"a": a})
+    loaded = task.load()[1]["a"]
+    _store_chunk(tmp_path / "self", {"a": loaded, "b": loaded.groupBy("x").count()})
+    assert write_log == [False, False, False, False, False]
+    assert _cache_manager(spark).isEmpty()
+    assert task.load()[1]["b"].count() == 10
