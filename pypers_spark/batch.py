@@ -10,7 +10,10 @@ isolation and parallelism. Under Spark the parallelism belongs *inside*
 the cluster — every task's jobs should get all executors — so tasks run
 async-sequentially in-process against the shared SparkSession, and
 cancellation goes through ``SparkContext.cancelAllJobs`` rather than a
-process kill (reference: batch.py:309).
+process kill (reference: batch.py:309). ``run(max_concurrency=N)`` lets
+up to N independent tasks share that session through its FAIR scheduler,
+each under its own pool; one scheduler serves every N, sequential being
+N = 1.
 """
 
 from __future__ import annotations
@@ -60,8 +63,8 @@ class Batch:
     def __init__(self, task_cls: Type[Task] = Task):
         self.tasks: Dict[pathlib.Path, Task] = {}
         self.task_cls = task_cls
-        self._running: Optional[asyncio.Task] = None
-        self._running_set: set = set()
+        # Future of each task in flight -> its index in the run's path order.
+        self._in_flight: Dict[asyncio.Future, int] = {}
         self._cancelled = False
 
     @property
@@ -127,156 +130,68 @@ class Batch:
         fail_fast: bool = True,
         max_concurrency: int = 1,
     ) -> bool:
-        """Run the pending tasks (deterministic path order).
+        """Run the pending tasks in deterministic path order.
 
-        Returns True if every task completed. A task error records an
-        ``error`` status entry (with traceback and failing stage).
+        Returns True if every task completed. Up to ``max_concurrency``
+        tasks are in flight at once. Whenever a slot is free, the first
+        context in path order that has not started and whose in-run
+        ancestors (path-prefix relation) have all finished starts next.
+        So a child always observes its parent's outputs, and at
+        ``max_concurrency=1`` (the default) tasks run one after another
+        in path order, each ``enter`` status entry's ``step`` being its
+        index in that order.
 
-        ``fail_fast=True`` (the default, matching the reference: its
-        Batch.run stops and returns False on the first task error —
-        reference batch.py:293-301; its one-process-per-task design is
-        about clean per-task memory, not continue-on-error) stops the
-        batch at the first failure.
+        Each task runs in a worker thread (see ``_run_in_thread``) under
+        its own FAIR scheduler pool, against the shared SparkSession.
+        With several tasks in flight the cluster scheduler time-slices
+        executors between them instead of the OS time-slicing processes:
+        the Spark-native answer to the reference's
+        one-OS-process-per-task parallelism (reference batch.py:132).
+        Each task keeps its own derived status file.
+
+        A task error records an ``error`` status entry (with traceback
+        and failing stage). ``fail_fast=True`` (the default, matching
+        the reference: its Batch.run stops and returns False on the
+        first task error — reference batch.py:293-301; its
+        one-process-per-task design is about clean per-task memory, not
+        continue-on-error) stops the batch at the first failure.
 
         ``fail_fast=False`` is an extension for long unattended sweeps:
         the batch continues with the remaining tasks, but DESCENDANTS of
         a failed task are skipped (recorded as ``skipped`` status
         entries) — they would pick up the failed parent's missing or
-        stale outputs and cascade. Cancellation always stops the batch.
+        stale outputs and cascade.
 
-        ``max_concurrency > 1`` runs up to that many INDEPENDENT tasks
-        at once against the shared SparkSession — the Spark-native
-        answer to the reference's one-OS-process-per-task parallelism
-        (reference batch.py:132): each task's jobs are submitted from
-        its own thread under its own FAIR scheduler pool
-        (``spark.scheduler.pool`` local property), so the cluster
-        scheduler time-slices executors between concurrent tasks
-        instead of the OS time-slicing processes. Ancestor/descendant
-        tasks are still serialized (a child must observe its parent's
-        outputs), each task keeps its own derived status file, and
-        fail_fast stops NEW tasks after the first failure (in-flight
-        tasks drain).
+        A stop (the first failure under ``fail_fast``, or ``cancel``)
+        starts no further task; the tasks in flight drain, and a
+        cancelled one records an ``interrupted`` entry. Tasks that never
+        start after a stop get no status entry, as in the reference.
+        Cancelling the ``run`` coroutine itself stops the batch the same
+        way, then re-raises ``CancelledError``.
         """
         self._cancelled = False
+        self._in_flight = {}
         contexts = self.pending if contexts is None else contexts
         contexts = sorted(contexts, key=lambda rc: rc.task.path.resolve())
-        if max_concurrency > 1:
-            return await self._run_concurrent(
-                contexts, status, fail_fast, max_concurrency
-            )
-        n_failed = 0
-        failed_paths: list = []
-        for rc_idx, rc in enumerate(contexts):
-            if self._cancelled:
-                return False
-            rc_path = rc.task.path.resolve()
-            failed_anc = next(
-                (p for p in failed_paths if p == rc_path or p in rc_path.parents), None
-            )
-            if failed_anc is not None:
-                status_mod.update(
-                    status,
-                    info="skipped",
-                    task=str(rc_path),
-                    reason=f"ancestor task failed: {failed_anc}",
-                )
-                n_failed += 1
-                continue
-            task_status = status_mod.derive(status)
-            status_mod.update(
-                task_status,
-                info="enter",
-                task=str(rc.task.path.resolve()),
-                step=rc_idx,
-                step_count=len(contexts),
-            )
-            try:
-                # To a thread so the event loop (status readers, UIs)
-                # stays responsive while Spark jobs run. The active
-                # SparkSession is thread-local — re-activate it in the
-                # worker thread so stages see the same session.
-                def _run_in_thread(rc=rc, task_status=task_status):
-                    from pypers_spark.session import current_session
-
-                    spark = current_session()
-                    try:
-                        spark.sparkContext.setLocalProperty(
-                            "spark.jobGroup.id", str(rc.task.path)
-                        )
-                    except Exception:
-                        pass
-                    try:
-                        return rc.run(status=task_status)
-                    finally:
-                        # to_thread reuses worker threads — clear the
-                        # attribution so later work from this thread
-                        # doesn't inherit a stale job group.
-                        try:
-                            spark.sparkContext.setLocalProperty(
-                                "spark.jobGroup.id", None
-                            )
-                        except Exception:
-                            pass
-
-                self._running = asyncio.ensure_future(asyncio.to_thread(_run_in_thread))
-                await self._running
-            except asyncio.CancelledError:
-                status_mod.update(
-                    status,
-                    info="interrupted",
-                    task=str(rc.task.path.resolve()),
-                    traceback=traceback.format_exc(),
-                    stage=None,
-                )
-                return False
-            except Exception as exc:
-                status_mod.update(
-                    status,
-                    info="error",
-                    task=str(rc.task.path.resolve()),
-                    traceback=traceback.format_exc(),
-                    stage=exc.stage.id if isinstance(exc, StageError) else None,
-                )
-                if fail_fast:
-                    return False
-                n_failed += 1
-                failed_paths.append(rc.task.path.resolve())
-            finally:
-                self._running = None
-        return n_failed == 0
-
-    async def _run_concurrent(
-        self,
-        contexts: List[RunContext],
-        status,
-        fail_fast: bool,
-        max_concurrency: int,
-    ) -> bool:
-        """Scheduler-shared parallel run (see ``run``'s docstring).
-
-        Every context gets a coroutine; a semaphore bounds how many hold
-        a run slot. Before taking a slot a task awaits the completion
-        events of its in-run ancestors (path-prefix relation), so
-        parent->child ordering is preserved without a global barrier,
-        and failure of an ancestor converts the descendant into the same
-        ``skipped`` status entry the sequential path records.
-        """
-        sem = asyncio.Semaphore(max_concurrency)
         paths = [rc.task.path.resolve() for rc in contexts]
-        done = {p: asyncio.Event() for p in paths}
-        results: Dict[pathlib.Path, bool] = {}
-        state = {"failed": False}
-
-        async def run_one(rc_idx: int, rc: RunContext) -> None:
-            rc_path = rc.task.path.resolve()
-            ok = False
-            try:
-                ancestors = [p for p in paths if p in rc_path.parents]
-                for p in ancestors:
-                    await done[p].wait()
-                failed_anc = next(
-                    (p for p in ancestors if results.get(p) is False), None
+        # In path order, so the first failed ancestor is the topmost.
+        ancestors = [[p for p in paths if p in path.parents] for path in paths]
+        not_started = list(range(len(contexts)))
+        # Every finished or skipped task's path -> whether it succeeded.
+        succeeded: Dict[pathlib.Path, bool] = {}
+        run_cancelled = False
+        while True:
+            stopped = self._cancelled or (fail_fast and not all(succeeded.values()))
+            while not stopped and len(self._in_flight) < max_concurrency:
+                rc_idx = next(
+                    (i for i in not_started if all(p in succeeded for p in ancestors[i])),
+                    None,
                 )
+                if rc_idx is None:
+                    break
+                not_started.remove(rc_idx)
+                rc, rc_path = contexts[rc_idx], paths[rc_idx]
+                failed_anc = next((p for p in ancestors[rc_idx] if not succeeded[p]), None)
                 if failed_anc is not None:
                     status_mod.update(
                         status,
@@ -284,110 +199,97 @@ class Batch:
                         task=str(rc_path),
                         reason=f"ancestor task failed: {failed_anc}",
                     )
-                    return
-                async with sem:
-                    if self._cancelled or (state["failed"] and fail_fast):
-                        status_mod.update(
-                            status,
-                            info="skipped",
-                            task=str(rc_path),
-                            reason="batch stopped",
-                        )
-                        return
-                    task_status = status_mod.derive(status)
-                    status_mod.update(
-                        task_status,
-                        info="enter",
-                        task=str(rc_path),
-                        step=rc_idx,
-                        step_count=len(contexts),
-                    )
-
-                    def _run_in_thread(rc=rc, rc_idx=rc_idx, task_status=task_status):
-                        from pypers_spark.session import current_session
-
-                        spark = current_session()
-                        try:
-                            # Per-task FAIR pool: concurrent tasks'
-                            # jobs share executors by scheduler
-                            # weight instead of queueing FIFO behind
-                            # each other. Thread-pool threads are
-                            # reused, so set (never inherit) both
-                            # properties at entry and clear at exit.
-                            spark.sparkContext.setLocalProperty(
-                                "spark.scheduler.pool", f"batch-{rc_idx}"
-                            )
-                            spark.sparkContext.setLocalProperty(
-                                "spark.jobGroup.id", str(rc.task.path)
-                            )
-                        except Exception:
-                            pass
-                        try:
-                            return rc.run(status=task_status)
-                        finally:
-                            # Clear BOTH properties: to_thread reuses
-                            # worker threads, and a stale jobGroup.id
-                            # would mis-attribute (and expose to
-                            # collateral cancelJobGroup) later work
-                            # submitted from the same thread.
-                            for prop in (
-                                "spark.scheduler.pool",
-                                "spark.jobGroup.id",
-                            ):
-                                try:
-                                    spark.sparkContext.setLocalProperty(
-                                        prop, None
-                                    )
-                                except Exception:
-                                    pass
-
-                    fut = asyncio.ensure_future(asyncio.to_thread(_run_in_thread))
-                    self._running_set.add(fut)
-                    try:
-                        await fut
-                    finally:
-                        self._running_set.discard(fut)
-                    ok = True
+                    succeeded[rc_path] = False
+                    continue
+                task_status = status_mod.derive(status)
+                status_mod.update(
+                    task_status,
+                    info="enter",
+                    task=str(rc_path),
+                    step=rc_idx,
+                    step_count=len(contexts),
+                )
+                fut = asyncio.ensure_future(
+                    asyncio.to_thread(_run_in_thread, rc, rc_idx, task_status)
+                )
+                self._in_flight[fut] = rc_idx
+            if not self._in_flight:
+                break
+            try:
+                done, _ = await asyncio.wait(
+                    self._in_flight, return_when=asyncio.FIRST_COMPLETED
+                )
             except asyncio.CancelledError:
-                status_mod.update(
-                    status,
-                    info="interrupted",
-                    task=str(rc_path),
-                    traceback=traceback.format_exc(),
-                    stage=None,
-                )
-            except Exception as exc:
-                status_mod.update(
-                    status,
-                    info="error",
-                    task=str(rc_path),
-                    traceback=traceback.format_exc(),
-                    stage=exc.stage.id if isinstance(exc, StageError) else None,
-                )
-            finally:
-                results[rc_path] = ok
-                if not ok:
-                    state["failed"] = True
-                done[rc_path].set()
-
-        futures = [
-            asyncio.ensure_future(run_one(i, rc)) for i, rc in enumerate(contexts)
-        ]
-        try:
-            await asyncio.gather(*futures, return_exceptions=True)
-        finally:
-            self._running_set.clear()
-        return not self._cancelled and all(results.get(p, False) for p in paths)
+                # run() itself was cancelled: stop as cancel() does, let
+                # the in-flight futures (cancelled too) drain into their
+                # status entries, then propagate.
+                run_cancelled = True
+                await self.cancel()
+                continue
+            for fut in sorted(done, key=self._in_flight.get):
+                rc_path = paths[self._in_flight.pop(fut)]
+                try:
+                    fut.result()
+                except (asyncio.CancelledError, Exception) as exc:
+                    status_mod.update(
+                        status,
+                        info="error" if isinstance(exc, Exception) else "interrupted",
+                        task=str(rc_path),
+                        traceback=traceback.format_exc(),
+                        stage=exc.stage.id if isinstance(exc, StageError) else None,
+                    )
+                    succeeded[rc_path] = False
+                else:
+                    succeeded[rc_path] = True
+        if run_cancelled:
+            raise asyncio.CancelledError
+        return not stopped and all(succeeded.values())
 
     async def cancel(self) -> None:
         """Cancel the currently running task(s) (if any)."""
         self._cancelled = True
-        pending = [f for f in ([self._running] + list(self._running_set)) if f]
-        if pending:
+        if self._in_flight:
             from pyspark.sql import SparkSession
 
             spark = SparkSession.getActiveSession()
             if spark is not None:
                 spark.sparkContext.cancelAllJobs()
-            for f in pending:
-                f.cancel()
+            for fut in self._in_flight:
+                fut.cancel()
+
+
+def _run_in_thread(rc: RunContext, rc_idx: int, task_status) -> TaskData:
+    """Run one task; ``Batch.run`` calls this in a worker thread so the
+    event loop (status readers, UIs) stays responsive while Spark jobs
+    run.
+
+    The active SparkSession is thread-local, so ``current_session``
+    falls back to the process-wide session here, the one stages see.
+    The task's jobs go to its own FAIR pool, so concurrent tasks share
+    executors by scheduler weight instead of queueing FIFO behind each
+    other, and carry the task path as job group, which attributes them
+    to the task.
+    """
+    from pypers_spark.session import current_session
+
+    spark = current_session()
+    props = {
+        "spark.scheduler.pool": f"batch-{rc_idx}",
+        "spark.jobGroup.id": str(rc.task.path),
+    }
+    for key, value in props.items():
+        try:
+            spark.sparkContext.setLocalProperty(key, value)
+        except Exception:
+            pass
+    try:
+        return rc.run(status=task_status)
+    finally:
+        # to_thread reuses worker threads: clear both properties, since
+        # a stale jobGroup.id would mis-attribute (and expose to
+        # collateral cancelJobGroup) later work from the same thread.
+        for key in props:
+            try:
+                spark.sparkContext.setLocalProperty(key, None)
+            except Exception:
+                pass

@@ -76,14 +76,15 @@ def get_session(app_name: str = "pypers_spark", master: str | None = None) -> Sp
         # joins even when AQE measures them at a few KB.
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # FAIR job scheduling: concurrent Batch tasks submit jobs from
-        # their own threads under per-task pools (batch.py sets the
+        # FAIR job scheduling: every Batch task submits its jobs from
+        # its own thread under its own pool (batch.py sets the
         # spark.scheduler.pool local property), and the scheduler
-        # time-slices executors between them — the Spark-native
-        # replacement for the reference's one-OS-process-per-task
-        # parallelism. With a single job in flight (the common case for
-        # the query gate/bench) FAIR degenerates to FIFO, so this costs
-        # nothing when unused.
+        # time-slices executors between concurrent tasks — the
+        # Spark-native replacement for the reference's
+        # one-OS-process-per-task parallelism. With a single job in
+        # flight (a sequential batch, the query gate/bench) FAIR, and a
+        # per-task pool, degenerate to FIFO, so this costs nothing when
+        # unused.
         .config("spark.scheduler.mode", os.environ.get("SPARK_GRAFT_SCHEDULER", "FAIR"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Scan fan-out for compute-heavy compressed inputs: Spark sizes

@@ -264,10 +264,14 @@ def _flat_status(entries):
     return out
 
 
-def test_batch_fail_fast_default_stops_at_first_error(tmp_path, sf_dir, spark):
+@pytest.mark.parametrize("max_concurrency", [1, 2])
+def test_batch_fail_fast_default_stops_at_first_error(
+    tmp_path, sf_dir, spark, max_concurrency
+):
     """Reference parity: Batch.run stops and returns False on the first
     task error (reference batch.py:293-301) — later sibling tasks are
-    not entered."""
+    not entered, and get no status entry. Tasks already in flight when
+    the error lands (``b_good`` at concurrency 2) drain."""
     write_spec(
         tmp_path / "a_bad",
         {
@@ -277,31 +281,39 @@ def test_batch_fail_fast_default_stops_at_first_error(tmp_path, sf_dir, spark):
             "config": {"scan-docs": {"path": "/nonexistent/nowhere.parquet"}},
         },
     )
-    write_spec(
-        tmp_path / "b_good",
-        {
-            "runnable": True,
-            "input_ids": [1],
-            "pipeline": ["tests.test_task_batch.ScanDocs"],
-            "config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}},
-        },
-    )
+    for name in ("b_good", "c_good"):
+        write_spec(
+            tmp_path / name,
+            {
+                "runnable": True,
+                "input_ids": [1],
+                "pipeline": ["tests.test_task_batch.ScanDocs"],
+                "config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}},
+            },
+        )
     batch = Batch()
     batch.load(tmp_path)
     from pypers_spark import status as status_mod
 
     with status_mod.create() as status:
-        ok = asyncio.run(batch.run(status=status))
+        ok = asyncio.run(batch.run(status=status, max_concurrency=max_concurrency))
         entries = _flat_status(json.loads(status.filepath.read_text()))
     assert not ok
     entered = [e["task"] for e in entries if isinstance(e, dict) and e.get("info") == "enter"]
-    assert any("a_bad" in t for t in entered)
-    assert not any("b_good" in t for t in entered)  # stopped before the sibling
+    names = [t.rsplit("/", 1)[-1] for t in entered]
+    # stopped before the siblings that had no slot
+    assert names == ["a_bad", "b_good"][:max_concurrency]
+    assert not any("c_good" in json.dumps(e) for e in entries)
 
 
-def test_batch_continue_skips_descendants_of_failed_task(tmp_path, sf_dir, spark):
+@pytest.mark.parametrize("max_concurrency", [1, 2])
+def test_batch_continue_skips_descendants_of_failed_task(
+    tmp_path, sf_dir, spark, max_concurrency
+):
     """fail_fast=False continues with siblings but skips descendants of
-    a failed task — they would resume from the failed parent's outputs."""
+    a failed task — they would resume from the failed parent's outputs.
+    The child's own config is valid, so only its ancestor's failure can
+    keep it from running; concurrency must not let it start early."""
     write_spec(
         tmp_path / "bad",
         {
@@ -311,7 +323,10 @@ def test_batch_continue_skips_descendants_of_failed_task(tmp_path, sf_dir, spark
             "config": {"scan-docs": {"path": "/nonexistent/nowhere.parquet"}},
         },
     )
-    write_spec(tmp_path / "bad" / "child", {"input_ids": [1]})
+    write_spec(
+        tmp_path / "bad" / "child",
+        {"config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}}},
+    )
     write_spec(
         tmp_path / "ok",
         {
@@ -326,13 +341,50 @@ def test_batch_continue_skips_descendants_of_failed_task(tmp_path, sf_dir, spark
     from pypers_spark import status as status_mod
 
     with status_mod.create() as status:
-        ok = asyncio.run(batch.run(status=status, fail_fast=False))
+        ok = asyncio.run(
+            batch.run(status=status, fail_fast=False, max_concurrency=max_concurrency)
+        )
         entries = _flat_status(json.loads(status.filepath.read_text()))
     assert not ok
     skipped = [e for e in entries if isinstance(e, dict) and e.get("info") == "skipped"]
-    assert any("child" in e["task"] for e in skipped)
+    assert [e["task"] for e in skipped] == [str((tmp_path / "bad" / "child").resolve())]
+    assert skipped[0]["reason"] == f"ancestor task failed: {(tmp_path / 'bad').resolve()}"
     entered = [e["task"] for e in entries if isinstance(e, dict) and e.get("info") == "enter"]
     assert any(t.endswith("ok") for t in entered)  # sibling still ran
+    assert not any("child" in t for t in entered)
+
+
+def test_batch_sequential_run_enters_tasks_in_path_order(tmp_path, sf_dir, spark):
+    """At max_concurrency=1 a child runs right after its parent, before
+    the next root: tasks enter in path order with ``step`` 0..n-1, even
+    though the second root is ready before the first root's child."""
+    for root in ("r1", "r2"):
+        write_spec(
+            tmp_path / root,
+            {
+                "runnable": True,
+                "input_ids": [1],
+                "pipeline": ["tests.test_task_batch.ScanDocs"],
+                "config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}},
+            },
+        )
+        write_spec(tmp_path / root / "c", {"input_ids": [1]})
+    batch = Batch()
+    batch.load(tmp_path)
+    from pypers_spark import status as status_mod
+
+    with status_mod.create() as status:
+        assert asyncio.run(batch.run(status=status))
+        entries = _flat_status(json.loads(status.filepath.read_text()))
+    entered = [
+        (e["task"], e["step"], e["step_count"])
+        for e in entries
+        if isinstance(e, dict) and e.get("info") == "enter"
+    ]
+    order = ["r1", "r1/c", "r2", "r2/c"]
+    assert entered == [
+        (str((tmp_path / name).resolve()), step, 4) for step, name in enumerate(order)
+    ]
 
 
 def test_times_benchmark_persisted(task_tree, spark):
@@ -437,41 +489,50 @@ class SlowStage(Stage):
         return {"slow": current_session().range(1)}
 
 
-def test_batch_cancel_interrupts_run(tmp_path, sf_dir):
+@pytest.mark.parametrize("max_concurrency", [1, 2])
+def test_batch_cancel_interrupts_run(tmp_path, sf_dir, max_concurrency):
     """Parity with reference tests/test_batch.py::Batch__cancel: cancel
     mid-run → Batch.run returns False promptly and records an
-    'interrupted' status entry."""
+    'interrupted' status entry for each task in flight. A task that had
+    no slot never starts."""
     import time
 
     from pypers_spark import status as status_mod
 
-    write_spec(
-        tmp_path / "slow",
-        {
-            "runnable": True,
-            "input_ids": [1],
-            "pipeline": ["tests.test_task_batch.SlowStage"],
-            "config": {"slow-stage": {"sleep_s": 5.0}},
-        },
-    )
+    for name in ("slow_a", "slow_b"):
+        write_spec(
+            tmp_path / name,
+            {
+                "runnable": True,
+                "input_ids": [1],
+                "pipeline": ["tests.test_task_batch.SlowStage"],
+                "config": {"slow-stage": {"sleep_s": 5.0}},
+            },
+        )
     batch = Batch()
     batch.load(tmp_path)
 
     async def scenario():
         with status_mod.create() as status:
             t0 = time.time()
-            run = asyncio.ensure_future(batch.run(status=status))
+            run = asyncio.ensure_future(
+                batch.run(status=status, max_concurrency=max_concurrency)
+            )
             await asyncio.sleep(0.4)
             await batch.cancel()
             ret = await run
             dt = time.time() - t0
-            return ret, dt, status_mod.load(status.filepath)
+            return ret, dt, _flat_status(json.loads(status.filepath.read_text()))
 
-    ret, dt, data = asyncio.run(scenario())
+    ret, dt, entries = asyncio.run(scenario())
     assert ret is False
     assert dt < 3.0  # did not wait out the 5 s stage
-    flat = json.dumps(data)
-    assert "interrupted" in flat
+    by_info = {}  # batch-level entries only, not the task's own progress
+    for e in entries:
+        if isinstance(e, dict) and e.get("info") in ("enter", "interrupted", "skipped", "error"):
+            by_info.setdefault(e["info"], set()).add(e["task"].rsplit("/", 1)[-1])
+    started = {"slow_a", "slow_b"} if max_concurrency == 2 else {"slow_a"}
+    assert by_info == {"enter": started, "interrupted": started}
 
 
 # Enter/exit wall intervals recorded by SparkJobStage invocations, so
@@ -600,52 +661,6 @@ def test_batch_concurrent_run_wall_and_status_isolation(tmp_path, sf_dir, spark)
         assert len(tasks) == 1, f"status file {f} interleaves tasks: {tasks}"
         per_file_tasks.append(next(iter(tasks)))
     assert len(set(per_file_tasks)) == 3
-
-
-def test_batch_concurrent_ancestor_ordering_and_skip(tmp_path, sf_dir, spark):
-    """Concurrent mode must still serialize parent -> child and convert a
-    failed ancestor's descendants into 'skipped' entries, like the
-    sequential fail_fast=False path."""
-    from pypers_spark import status as status_mod
-
-    write_spec(
-        tmp_path / "bad",
-        {
-            "runnable": True,
-            "input_ids": [1],
-            "pipeline": ["tests.test_task_batch.ScanDocs"],
-            "config": {"scan-docs": {"path": "/nonexistent/nowhere.parquet"}},
-        },
-    )
-    write_spec(
-        tmp_path / "bad" / "child",
-        {"config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}}},
-    )
-    write_spec(
-        tmp_path / "ok",
-        {
-            "runnable": True,
-            "input_ids": [1],
-            "pipeline": ["tests.test_task_batch.ScanDocs"],
-            "config": {"scan-docs": {"path": f"{sf_dir}/documents.parquet"}},
-        },
-    )
-    batch = Batch()
-    batch.load(tmp_path)
-    with status_mod.create() as status:
-        ok = asyncio.run(
-            batch.run(status=status, fail_fast=False, max_concurrency=3)
-        )
-        entries = _flat_status(json.loads(status.filepath.read_text()))
-    assert not ok
-    skipped = [
-        e for e in entries if isinstance(e, dict) and e.get("info") == "skipped"
-    ]
-    assert any("child" in e["task"] for e in skipped)
-    assert any(
-        isinstance(e, dict) and e.get("info") == "enter" and "ok" in e["task"]
-        for e in entries
-    )
 
 
 # -- Task.store executes each stored lineage once -----------------------------
